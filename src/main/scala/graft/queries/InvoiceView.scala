@@ -281,7 +281,7 @@ object InvoiceView {
                        pushedDistinct: Boolean = true): DataFrame = {
     // stp feeds product_lines and gift_card_lines; product_lines feeds the
     // union and shipping_lines — persisting both roughly halves the
-    // pipeline's cold time (measured in tools.ProfileInvoice). The final
+    // pipeline's cold time (measured by profiling the view). The final
     // view is NOT persisted: its consumers traverse it once, and columnar
     // cache construction for the wide result costs more than recomputing.
     // ── Pushed-distinct rewrite (default) ─────────────────────────────────
@@ -307,7 +307,7 @@ object InvoiceView {
     // scale (true for every Shopify-normalized table) — otherwise the
     // pre-cast dedup could be finer than the post-cast one; pass
     // pushedDistinct=false for exotic inputs.
-    // Persist policy (measured, tools.ProfileQ36Variants): persist the
+    // Persist policy (measured on the view's variants): persist the
     // NARROW shared inputs — stp (one row per successful payment) and the
     // deduped 8-column lip projection — never the wide `pl`. Caching the
     // wide view costs more to build than its consumers save, and racing
