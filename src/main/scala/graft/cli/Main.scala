@@ -90,12 +90,11 @@ object Main {
       InvoiceCsv.write(renamed, flags("out"))
 
     case "tripletex-verify" =>
-      val df = InvoiceCsv.read(spark, flags("in"))
-      val findings = Checks.verifyInvoices(df, knownGateways(gateways))
-      findings.flatMap(_.warnings).foreach(w => System.err.println(s"WARNING: $w"))
-      val (ordinary, refund) = Checks.orderCounts(Checks.normalizeEmpty(df))
-      System.err.println(s"There are $ordinary ordinary orders and $refund refund-only orders")
-      if (Checks.passed(findings))
+      val report = Checks.verify(InvoiceCsv.read(spark, flags("in")), knownGateways(gateways))
+      report.findings.flatMap(_.warnings).foreach(w => System.err.println(s"WARNING: $w"))
+      System.err.println(
+        s"There are ${report.ordinary} ordinary orders and ${report.refund} refund-only orders")
+      if (Checks.passed(report.findings))
         System.err.println("No irregularities detected in the invoices")
       else
         System.err.println("Invoices contain one or more notices that should be checked manually")

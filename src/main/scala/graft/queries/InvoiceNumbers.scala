@@ -18,9 +18,14 @@ import org.apache.spark.sql.expressions.Window
   *
   * Scale note: the global row_number runs on the *grouped index* (one row
   * per order+tag), orders of magnitude smaller than the line-level view —
-  * a single-partition window over it is the right trade at any SF. The
-  * invoice view feeding both sides is computed once (cached by caller or
-  * recomputed — Catalyst reuses the exchange under AQE).
+  * a single-partition window over it is the right trade at any SF.
+  *
+  * [[numberInvoices]] returns the numbered frame materialized: an eager
+  * `localCheckpoint` computes it once, in one Spark action, and cuts its
+  * lineage. The gateway rename, the checks and the CSV export then plan
+  * over the checkpointed rows, never over the view and its store scans.
+  * The rows live in the block manager until the frame is unreferenced or
+  * its RDD is unpersisted.
   */
 object InvoiceNumbers {
 
@@ -57,6 +62,7 @@ object InvoiceNumbers {
         col("ti.DUE DATE").as("DUE DATE"),
         col("ind.INVOICE NO").as("INVOICE NO"))
       .orderBy(col("INVOICE NO"), col("CUSTOMER NAME"))
+      .localCheckpoint()
   }
 
   /** Single-pass equivalent of [[numberInvoices]]: instead of building the
