@@ -45,6 +45,18 @@ object Main {
     (flags, gateways)
   }
 
+  /** Generated-code settings that let a warm JVM reuse its classes. One op
+    * alone outgrows the default cache of 100 generated classes, so every op
+    * evicted and recompiled them; a JVM that runs every subcommand holds
+    * about 365, and the cache may evict before it is full, hence the wide
+    * headroom. It is a static conf, read once per JVM at the first compile.
+    * Without the stage id in the class name, a stage whose code was
+    * compiled before under another AQE stage number hits the cache.
+    */
+  private[graft] val codegenSettings: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "4000",
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
   private def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val s = SparkSession.builder()
@@ -53,6 +65,7 @@ object Main {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(codegenSettings)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

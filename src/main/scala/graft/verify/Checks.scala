@@ -104,11 +104,16 @@ object Checks {
   /** `tripletex.py:65-99`: the missing numbers, ascending, between the
     * smallest and largest order number of non-refund rows (F11 parse) and
     * between those of the invoice numbers — one `lag` pass over the
-    * distinct numbers; the collected gaps are expanded one by one.
+    * distinct numbers; the collected gaps are expanded one by one. Only
+    * '#<digits>' names are parsed: a zero-amount refund row ('#5-1') passes
+    * the amount filter, and ANSI mode throws on its cast (the reference's
+    * `int(str[1:])` raises on it too).
     */
   private def gaps(df: DataFrame): (Seq[Long], Seq[Long]) = {
+    val orderNo = col("ORDER NO")
     val nums = df.filter(col("PAID AMOUNT") >= 0)
-      .select(lit(0).as("k"), substring(col("ORDER NO"), 2, 18).cast("long").as("n"))
+      .select(lit(0).as("k"),
+        when(orderNo.rlike("^#[0-9]+$"), substring(orderNo, 2, 18).cast("long")).as("n"))
       .union(df.select(lit(1).as("k"), col("INVOICE NO").cast("long").as("n")))
       .filter(col("n").isNotNull).distinct()
     val rows = nums

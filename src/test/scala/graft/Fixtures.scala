@@ -145,6 +145,15 @@ object Fixtures {
       |  {"id":1000000001,"quantity":2,"line_item":{"id":7000000101},"subtotal":"798.00",
       |   "subtotal_set":{"shop_money":{"currency_code":"NOK"}}}]}]}""".stripMargin.replace("\n", "")
 
+  /** [[transportFixtures]] with a second, zero-amount line on #1043's
+    * refund: the invoice view emits it as a '#1043-1' row whose PAID AMOUNT
+    * is 0, not negative.
+    */
+  lazy val zeroRefundLineFixtures: Map[String, String] = transportFixtures.updated(
+    s"${base}orders/4000000002/refunds.json", refunds1043.stripSuffix("]}]}") +
+      """,{"id":1000000002,"quantity":1,"line_item":{"id":7000000101},"subtotal":"0.00",""" +
+      """"subtotal_set":{"shop_money":{"currency_code":"NOK"}}}]}]}""")
+
   private val emptyRefunds = """{"refunds":[]}"""
   private val emptyTx = """{"transactions":[]}"""
 

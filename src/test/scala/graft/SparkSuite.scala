@@ -15,6 +15,8 @@ object SparkSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // the program's generated-code settings (`Main.session`)
+      .config(graft.cli.Main.codegenSettings)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

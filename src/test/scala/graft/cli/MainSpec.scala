@@ -2,7 +2,10 @@ package graft.cli
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import graft.{Fixtures, SparkSuite}
+import graft.ingest.{IngestPipeline, ShopifyClient}
+import graft.store.ShopifyStore
 
 /** Drives the four CLI subcommands end-to-end (E1–E3 +
   * tripletex-verify) through Main.run — the user-facing surface.
@@ -58,19 +61,18 @@ class MainSpec extends SparkSuite {
     }
   }
 
-  test("Main.session is the benchmark's session factory: local[SPARK_GRAFT_CPUS]") {
-    // opsbench/src/opsbench/OpsBench.scala reaches this private method by
-    // reflection, so a rename compiles everywhere and fails only there
-    assert(Main.getClass.getDeclaredMethod("session").getParameterCount == 0)
-    // one SparkContext per JVM: the factory runs in a child JVM, with a
-    // CPU count no host default or test session shares
+  /** Runs `probe`'s main with `args` in a child JVM (one SparkContext per
+    * JVM, and codegen's class cache is sized once per JVM) on the test JVM's
+    * options and classpath; returns its stdout lines and a failure report.
+    */
+  private def childJvm(probe: AnyRef, cpus: Int, args: String*): (List[String], String) = {
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.filterNot(a => a.startsWith("-Xm") || a.startsWith("-agentlib"))
     val pb = new ProcessBuilder((Seq(
       s"${System.getProperty("java.home")}/bin/java", "-Xmx1g") ++ jvmArgs ++ Seq(
-      "-cp", System.getProperty("java.class.path"), MainSessionProbe.getClass.getName.stripSuffix("$")))
+      "-cp", System.getProperty("java.class.path"), probe.getClass.getName.stripSuffix("$")) ++ args)
       .asJava)
-    pb.environment().put("SPARK_GRAFT_CPUS", "3")
+    pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
     val dir = java.nio.file.Paths.get(workDir)
     val (outFile, log) = (Files.createTempFile(dir, "probe", ".out"), Files.createTempFile(dir, "probe", ".log"))
     pb.redirectOutput(outFile.toFile).redirectError(log.toFile)
@@ -78,22 +80,72 @@ class MainSpec extends SparkSuite {
     val done = proc.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)
     if (!done) proc.destroyForcibly().waitFor()
     val out = Files.readAllLines(outFile).asScala.toList
-    def why = (out ++ Files.readAllLines(log).asScala.takeRight(40)).mkString("\n")
+    val why = (out ++ Files.readAllLines(log).asScala.takeRight(40)).mkString("\n")
     assert(done && proc.exitValue == 0, why)
+    (out, why)
+  }
+
+  test("Main.session is the benchmark's session factory: local[SPARK_GRAFT_CPUS]") {
+    // opsbench/src/opsbench/OpsBench.scala reaches this private method by
+    // reflection, so a rename compiles everywhere and fails only there
+    assert(Main.getClass.getDeclaredMethod("session").getParameterCount == 0)
+    // a CPU count no host default or test session shares
+    val (out, why) = childJvm(MainSessionProbe, cpus = 3)
     assert(out.contains("master=local[3] shuffle.partitions=3"), why)
+  }
+
+  test("Main.session keeps generated classes: a second tripletex-generate compiles nothing") {
+    val (out, why) = childJvm(WarmCodegenProbe, cpus = 2, workDir)
+    val Seq(first, second) = out.collectFirst { case s"compiles first=$a second=$b" => Seq(a, b) }
+      .getOrElse(fail(why)).map(_.toLong)
+    assert(first > 0, why)
+    assert(second == 0, why)
   }
 }
 
-/** Prints the master and shuffle partitions of the session `Main.session`
-  * returns, reached the way the benchmark reaches it.
+/** The session `Main.session` returns, reached the way the benchmark
+  * reaches it.
   */
-object MainSessionProbe {
-  def main(args: Array[String]): Unit = {
+private object MainSession {
+  def apply(): org.apache.spark.sql.SparkSession = {
     val m = Main.getClass.getDeclaredMethod("session")
     m.setAccessible(true)
-    val s = m.invoke(Main).asInstanceOf[org.apache.spark.sql.SparkSession]
+    m.invoke(Main).asInstanceOf[org.apache.spark.sql.SparkSession]
+  }
+}
+
+/** Prints the master and shuffle partitions of `Main.session`'s session. */
+object MainSessionProbe {
+  def main(args: Array[String]): Unit = {
+    val s = MainSession()
     try println(s"master=${s.sparkContext.master} " +
       s"shuffle.partitions=${s.conf.get("spark.sql.shuffle.partitions")}")
     finally s.stop()
+  }
+}
+
+/** Ingests the golden fixtures into a store under `args(0)`, then runs
+  * `tripletex-generate` twice on `Main.session`'s session and prints the
+  * Janino compiles of each pass.
+  */
+object WarmCodegenProbe {
+  def main(args: Array[String]): Unit = {
+    val s = MainSession()
+    val dir = Files.createTempDirectory(java.nio.file.Paths.get(args(0)), "warm").toString
+    try {
+      IngestPipeline.shopifyUpdate(s, new ShopifyStore(s, s"$dir/store"),
+        new ShopifyClient(new ShopifyClient.FixtureTransport(Fixtures.transportFixtures), Fixtures.base),
+        createdAtMin = Some("2021-05-01"), createdAtMax = Some("2021-05-31"))
+      def generate(out: String): Long = {
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        Main.run(s, "tripletex-generate", Map(
+          "store" -> s"$dir/store", "from-date" -> "2021-05-01", "to-date" -> "2021-05-31",
+          "invoice-start-id" -> "100", "out" -> s"$dir/$out"),
+          Seq("vipps" -> "Vipps", "stripe" -> "Stripe"))
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      }
+      val first = generate("first.csv")
+      println(s"compiles first=$first second=${generate("second.csv")}")
+    } finally s.stop()
   }
 }

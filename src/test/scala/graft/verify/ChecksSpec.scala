@@ -1,6 +1,11 @@
 package graft.verify
 
-import graft.SparkSuite
+import java.nio.file.Files
+import java.time.LocalDate
+import graft.{Fixtures, SparkSuite}
+import graft.ingest.{IngestPipeline, ShopifyClient}
+import graft.queries.{InvoiceNumbers, InvoiceView}
+import graft.store.ShopifyStore
 import org.apache.spark.sql.functions._
 
 /** Edge-case coverage for the 8 invariant checks beyond the golden E2E
@@ -157,5 +162,27 @@ class ChecksSpec extends SparkSuite {
     assert(finding(df, "invoice_no").passed)
     assert(finding(df, "none_values").warnings ==
       Seq("Required column INVOICE NO is missing for orders #2"))
+  }
+
+  test("a zero-amount refund row does not break the order-number parse") {
+    // '#5-1' passes PAID AMOUNT >= 0; ANSI mode would throw on its cast
+    val df = frame(Seq(
+      (1, "#5", 10.0, 1, 10.0, 0.0, "V", 1L, "A"),
+      (1, "#5-1", 0.0, -1, 0.0, 0.0, "V", 2L, "A")))
+    assert(finding(df, "order_no").passed)
+    assert(finding(df, "refunds").warnings == Seq("The following 1 orders are refunds: #5-1"))
+  }
+
+  test("the invoice view's zero-amount refund line passes the gap check") {
+    val store = new ShopifyStore(spark, Files.createTempDirectory("zero-refund").toString)
+    IngestPipeline.shopifyUpdate(spark, store, new ShopifyClient(
+        new ShopifyClient.FixtureTransport(Fixtures.zeroRefundLineFixtures), Fixtures.base),
+      createdAtMin = Some("2021-05-01"), createdAtMax = Some("2021-05-31"))
+    val numbered = InvoiceNumbers.numberInvoices(InvoiceView.tripletexInvoice(store.invoiceTables),
+      LocalDate.parse("2021-05-01"), LocalDate.parse("2021-05-31"), 100)
+    assert(numbered.filter(col("ORDER NO") === "#1043-1" && col("PAID AMOUNT") === 0).count() == 1)
+    val byName = Checks.verifyInvoices(numbered, None).map(f => f.check -> f).toMap
+    assert(byName("order_no").passed && byName("invoice_no").passed)
+    assert(byName("refunds").warnings == Seq("The following 1 orders are refunds: #1043-1"))
   }
 }
