@@ -65,121 +65,6 @@ object InvoiceNumbers {
       .localCheckpoint()
   }
 
-  /** Single-pass equivalent of [[numberInvoices]]: instead of building the
-    * grouped index and right-joining the view back onto it (which consumes
-    * the view twice — `db.py:459-469`'s literal shape), keep rows whose
-    * ("ORDER NO", payment_tag) pair has ≥1 in-range INVOICE DATE via a
-    * pair-partitioned window, and number with dense_rank over the same
-    * pair order — the identical result (spec-asserted) computed in ONE
-    * traversal. Preserves the join-based range semantics exactly: a pair
-    * whose dates straddle the range keeps ALL its rows, matching the right
-    * join.
-    *
-    * Scale note: the dense_rank's single-partition window runs over the
-    * line-level rows rather than the pair index — the right trade when
-    * recomputing/caching the whole view is the alternative. Both forms are
-    * exposed; callers pick per workload.
-    */
-  def numberInvoicesSinglePass(view: DataFrame, fromDate: LocalDate, toDate: LocalDate,
-                               invoiceStartId: Long): DataFrame = {
-    val pairW = Window.partitionBy(col("ORDER NO"), col("payment_tag"))
-    val anyInRange = max(
-      when(col("INVOICE DATE").between(lit(fromDate.toString).cast("date"),
-        lit(toDate.toString).cast("date")), 1).otherwise(0)).over(pairW)
-    view
-      .withColumn("__keep", anyInRange)
-      .filter(col("__keep") === 1)
-      .withColumn("INVOICE NO",
-        dense_rank().over(Window.orderBy(col("ORDER NO"), col("payment_tag")))
-          .cast("long") + lit(invoiceStartId) - 1)
-      .select(
-        col("transaction_id"), col("order_id"), col("CUSTOMER NO"), col("CUSTOMER NAME"),
-        col("ORDER NO"), col("PAID AMOUNT"), col("PAYMENT TYPE"),
-        col("ORDER LINE - COUNT"), col("ORDER LINE - PROD NAME"),
-        col("ORDER LINE - UNIT PRICE"), col("ORDER LINE - DISCOUNT"),
-        col("ORDER LINE - VAT CODE"), col("ORDER LINE - DESCRIPTION"),
-        col("ORDER LINE - PROD NO"), col("INVOICE DATE"), col("DELIVERY DATE"),
-        col("ORDER DATE"), col("DUE DATE"), col("INVOICE NO"))
-      .orderBy(col("INVOICE NO"), col("CUSTOMER NAME"))
-  }
-
-  /** Scale-safe form of the numbering: same result as [[numberInvoices]] /
-    * [[numberInvoicesSinglePass]] (spec-asserted), but no global window
-    * ever sees line-level rows and the view is traversed ONCE.
-    *
-    * Shape: one hash shuffle of the view on the pair key feeds (a) the
-    * pair-partitioned keep-flag window (join-based range semantics: a pair
-    * with ≥1 in-range date keeps ALL its rows) and (b) a partial+final
-    * count aggregate on the SAME keys — no second exchange, and the
-    * shuffle below both consumers is deduplicated by ReuseExchange, so the
-    * expensive view subtree executes once. The single-partition
-    * row_number then runs over the grouped PAIR INDEX (orders × tags —
-    * thousands of rows where the view has millions), and the numbered
-    * index broadcasts back onto the kept rows. At 1000 executors the only
-    * serialized data is the index, never the view.
-    */
-  def numberInvoicesTwoPhase(view: DataFrame, fromDate: LocalDate, toDate: LocalDate,
-                             invoiceStartId: Long): DataFrame = {
-    val pairW = Window.partitionBy(col("ORDER NO"), col("payment_tag"))
-    val anyInRange = max(
-      when(col("INVOICE DATE").between(lit(fromDate.toString).cast("date"),
-        lit(toDate.toString).cast("date")), 1).otherwise(0)).over(pairW)
-    val kept = view
-      .withColumn("__keep", anyInRange)
-      .filter(col("__keep") === 1)
-      .drop("__keep")
-    val ind = kept
-      .groupBy(col("ORDER NO"), col("payment_tag")).agg(count(lit(1)).as("__n")).drop("__n")
-      .withColumn("INVOICE NO",
-        row_number().over(Window.orderBy(col("ORDER NO"), col("payment_tag"))).cast("long") +
-          lit(invoiceStartId) - 1)
-    kept
-      .join(broadcast(ind), Seq("ORDER NO", "payment_tag"))
-      .select(
-        col("transaction_id"), col("order_id"), col("CUSTOMER NO"), col("CUSTOMER NAME"),
-        col("ORDER NO"), col("PAID AMOUNT"), col("PAYMENT TYPE"),
-        col("ORDER LINE - COUNT"), col("ORDER LINE - PROD NAME"),
-        col("ORDER LINE - UNIT PRICE"), col("ORDER LINE - DISCOUNT"),
-        col("ORDER LINE - VAT CODE"), col("ORDER LINE - DESCRIPTION"),
-        col("ORDER LINE - PROD NO"), col("INVOICE DATE"), col("DELIVERY DATE"),
-        col("ORDER DATE"), col("DUE DATE"), col("INVOICE NO"))
-      .orderBy(col("INVOICE NO"), col("CUSTOMER NAME"))
-  }
-
-  /** The flagship's production form: the pair index is built from
-    * `pairDates` — a NARROW source of (ORDER NO, payment_tag,
-    * INVOICE DATE) rows with the same pair/date content as the view
-    * (InvoiceView.tripletexInvoicePairDates) — so the wide view is
-    * traversed exactly ONCE, by the final join. Identical output to
-    * [[numberInvoices]] (spec-asserted): the inner join reproduces the
-    * reference's RIGHT join because every index pair has ≥1 view row by
-    * construction. The only single-partition work is the row_number over
-    * the distinct pair index (orders × tags), and the numbered index
-    * broadcasts back onto the view.
-    */
-  def numberInvoicesIndexed(view: DataFrame, pairDates: DataFrame,
-                            fromDate: LocalDate, toDate: LocalDate,
-                            invoiceStartId: Long): DataFrame = {
-    val ind = pairDates
-      .filter(col("INVOICE DATE").between(lit(fromDate.toString).cast("date"),
-        lit(toDate.toString).cast("date")))
-      .select(col("ORDER NO"), col("payment_tag")).distinct()
-      .withColumn("INVOICE NO",
-        row_number().over(Window.orderBy(col("ORDER NO"), col("payment_tag"))).cast("long") +
-          lit(invoiceStartId) - 1)
-    view
-      .join(broadcast(ind), Seq("ORDER NO", "payment_tag"))
-      .select(
-        col("transaction_id"), col("order_id"), col("CUSTOMER NO"), col("CUSTOMER NAME"),
-        col("ORDER NO"), col("PAID AMOUNT"), col("PAYMENT TYPE"),
-        col("ORDER LINE - COUNT"), col("ORDER LINE - PROD NAME"),
-        col("ORDER LINE - UNIT PRICE"), col("ORDER LINE - DISCOUNT"),
-        col("ORDER LINE - VAT CODE"), col("ORDER LINE - DESCRIPTION"),
-        col("ORDER LINE - PROD NO"), col("INVOICE DATE"), col("DELIVERY DATE"),
-        col("ORDER DATE"), col("DUE DATE"), col("INVOICE NO"))
-      .orderBy(col("INVOICE NO"), col("CUSTOMER NAME"))
-  }
-
   /** F15 (`tripletex.py:194-201`): map-driven gateway rename with identity
     * fallback.
     */

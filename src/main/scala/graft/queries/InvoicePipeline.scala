@@ -137,24 +137,11 @@ object InvoicePipeline {
     "ORDER LINE - UNIT PRICE", "ORDER LINE - COUNT")
 
   def invoicePipeline(spark: SparkSession, dir: String): DataFrame = {
-    // sorted=false: the numbering re-sorts, the view's ORDER BY would be
-    // dead weight. Indexed numbering traverses the wide view exactly once:
-    // the pair index comes from the narrow 3-column twin (pruned scans;
-    // stp/pl served from the view's persisted subplans), and no global
-    // window ever sees line-level rows (equivalence spec-asserted).
-    // persist=false + pushedDistinct=true (measured, ProfileQ36Variants):
-    // caching the wide pl costs more than its consumers save (and racing
-    // broadcast subtrees can double-build it); the pushed distinct keeps
-    // the only large shuffle at the narrow 8-column lip dedup, which
-    // ReuseExchange serves to every consumer within the one plan.
-    val tables = buildTables(spark, dir)
-    val view = InvoiceView.tripletexInvoice(tables, sorted = false,
-      persist = false)
-    // pairDates skips the lip dedup (pushedDistinct=false): the numbering
-    // index distincts its pairs anyway, and without the blocking distinct
-    // Catalyst prunes the lip scan to the join column only.
-    val numbered = InvoiceNumbers.numberInvoicesIndexed(view,
-      InvoiceView.tripletexInvoicePairDates(tables),
+    // The CLI's view and numbering: `numberInvoices` computes the numbered
+    // frame in one Spark action (its eager checkpoint), and the casts and
+    // the sort below plan over the checkpointed rows.
+    val numbered = InvoiceNumbers.numberInvoices(
+      InvoiceView.tripletexInvoice(buildTables(spark, dir)),
       LocalDate.parse("1996-01-01"), LocalDate.parse("1998-12-31"), 5000L)
     val money = Seq("PAID AMOUNT", "ORDER LINE - UNIT PRICE", "ORDER LINE - DISCOUNT")
     val out = money.foldLeft(numbered)((d, c) => d.withColumn(c, col(c).cast("double")))

@@ -200,9 +200,8 @@ object InvoiceView {
     * branch is stp1 ⨝ orders ⨝ customers ⨝ (rank-1 shipping row per order),
     * which drops a whole product_lines recomputation (lineitem scan +
     * per-order window + lip dedup exchange) and shrinks the W2 window to
-    * the shipping table alone. Equality with the pl-joined form is
-    * spec-asserted (InvoiceViewSpec) and oracle-checked (the DuckDB mirror
-    * still runs the reference's pl-joined CTE).
+    * the shipping table alone. Equality with a literal transcription of
+    * the reference's pl-joined CTE is spec-asserted (GoldenE2ESpec).
     */
   def shippingLines(t: Tables, stp: DataFrame): DataFrame = {
     val stp1 = stp.filter(col("transaction_rank") === 1).as("t")
@@ -240,8 +239,7 @@ object InvoiceView {
 
   /** The 8-column lip projection product_lines actually consumes, deduped —
     * the pushed-down form of the view's UNION-distinct (see
-    * [[tripletexInvoice]]). One canonical definition so the view and the
-    * pair-index twin build PLAN-IDENTICAL subtrees (cache/exchange reuse).
+    * [[tripletexInvoice]]).
     */
   private def dedupedLip(lip: DataFrame): DataFrame =
     lip.select(
@@ -269,25 +267,13 @@ object InvoiceView {
 
   /** The full view (`setup.sql:358-394`): UNION-distinct of the four
     * branches (load-bearing dedup), outer rank filter, money rounding,
-    * final projection + sort. `priority` participates in the sort only.
+    * final projection. The view's trailing ORDER BY (`setup.sql:392-393`)
+    * is left out: its one consumer, the numbering, sorts its own output.
     */
-  /** `sorted = false` skips the view's trailing ORDER BY
-    * (`setup.sql:392-393`) for consumers that immediately re-sort (the
-    * numbering pipeline): a global range sort below a persist() would be
-    * materialized, not optimized away.
-    */
-  def tripletexInvoice(t: Tables, sorted: Boolean = true,
-                       persist: Boolean = true,
-                       pushedDistinct: Boolean = true): DataFrame = {
-    // stp feeds product_lines and gift_card_lines; product_lines feeds the
-    // union and shipping_lines — persisting both roughly halves the
-    // pipeline's cold time (measured by profiling the view). The final
-    // view is NOT persisted: its consumers traverse it once, and columnar
-    // cache construction for the wide result costs more than recomputing.
-    // ── Pushed-distinct rewrite (default) ─────────────────────────────────
+  def tripletexInvoice(t: Tables): DataFrame = {
     // The trailing UNION-distinct (`setup.sql:358-365`, load-bearing dedup)
-    // is a wide 21-column hash-shuffle over every line-level row. It can be
-    // pushed below the joins because:
+    // would be a wide 21-column hash-shuffle over every line-level row. It
+    // is pushed below the joins because:
     //  (1) the four branches are pairwise DISJOINT row sets — each carries
     //      its own `priority` literal (1..4) as a row column — so the
     //      global distinct ≡ union of per-branch distincts;
@@ -302,87 +288,35 @@ object InvoiceView {
     //      refund line) — two distinct lipr rows can reference different
     //      lip rows that project identically.
     // Equality with the literal wide distinct is spec-asserted
-    // (InvoiceViewSpec), including on inputs with planted duplicate line
+    // (GoldenE2ESpec), including on inputs with planted duplicate line
     // items. Caveat: assumes money inputs are already at ≤ (38,9) decimal
     // scale (true for every Shopify-normalized table) — otherwise the
-    // pre-cast dedup could be finer than the post-cast one; pass
-    // pushedDistinct=false for exotic inputs.
-    // Persist policy (measured on the view's variants): persist the
+    // pre-cast dedup could be finer than the post-cast one.
+    // Persist policy (measured): persist the
     // NARROW shared inputs — stp (one row per successful payment) and the
     // deduped 8-column lip projection — never the wide `pl`. Caching the
-    // wide view costs more to build than its consumers save, and racing
-    // broadcast subtrees double-build it; the narrow caches are cheap to
-    // build and serve every consumer (union, shipping, pair index).
-    val stp0 = successTransactionPayments(t.transactions)
-    val stp = if (persist) stp0.persist() else stp0
-    val plInput = if (pushedDistinct) {
-      val lipDedup0 = dedupedLip(t.lineItemProducts)
-      t.copy(lineItemProducts = if (persist) lipDedup0.persist() else lipDedup0)
-    } else t
-    val pl0 = productLines(plInput, stp)
-    // wide-distinct path keeps the legacy pl persist (its distinct consumes
-    // pl twice as often); pushed path reads pl straight through
-    val pl = if (persist && !pushedDistinct) pl0.persist() else pl0
-    val refunds0 = aligned(refundLines(t))
-    val refunds = if (pushedDistinct) refunds0.distinct() else refunds0
-    val unionAll = aligned(pl)
-      .unionByName(refunds)
+    // wide view costs more to build than its consumers save; the narrow
+    // caches are cheap to build and serve every branch that reads them.
+    val stp = successTransactionPayments(t.transactions).persist()
+    val lip = dedupedLip(t.lineItemProducts).persist()
+    aligned(productLines(t.copy(lineItemProducts = lip), stp))
+      .unionByName(aligned(refundLines(t)).distinct())
       .unionByName(aligned(shippingLines(t, stp)))
       .unionByName(aligned(giftCardLines(t, stp)))
-    val deduped = (if (pushedDistinct) unionAll else unionAll.distinct())
       .filter(col("rank") === 1)
-    val unioned =
-      if (sorted) deduped.orderBy(col("INVOICE DATE").desc, col("order_id").asc,
-        col("CUSTOMER NAME").asc, col("priority").asc)
-      else deduped
-    unioned.select(
-      col("transaction_id"), col("order_id"), col("payment_tag"),
-      col("CUSTOMER NO"), col("CUSTOMER NAME"), col("ORDER NO"),
-      round(col("PAID AMOUNT"), 2).as("PAID AMOUNT"),
-      col("ORDER LINE - COUNT"),
-      col("ORDER LINE - PROD NAME"),
-      round(col("ORDER LINE - UNIT PRICE"), 2).as("ORDER LINE - UNIT PRICE"),
-      round(col("ORDER LINE - DISCOUNT"), 2).as("ORDER LINE - DISCOUNT"),
-      col("ORDER LINE - VAT CODE"),
-      col("ORDER LINE - DESCRIPTION"),
-      col("ORDER LINE - PROD NO"),
-      col("PAYMENT TYPE"),
-      col("INVOICE DATE"), col("DELIVERY DATE"), col("ORDER DATE"), col("DUE DATE"))
-  }
-
-  /** Narrow 3-column twin of the view for pair-index building: the DISTINCT
-    * set of (ORDER NO, payment_tag, INVOICE DATE) triples the view carries —
-    * the only thing [[InvoiceNumbers.numberInvoicesIndexed]] consumes (it
-    * date-filters, distincts the pairs, and numbers them).
-    *
-    * Slimmed to TWO branches (r7). The view's four branches yield:
-    *  - product_lines: (o.name, 'payment', date(o.created_at)) per rank-1
-    *    payment order — lip only multiplies rows, never changes the triple;
-    *  - shipping_lines / gift_card_lines: the SAME triple for a SUBSET of
-    *    those orders (both require the rank-1 stp row and project the same
-    *    o.name / o.created_at) — no new triples;
-    *  - refund_lines: (o.name||'-1', 'refund', date(r.created_at)) per
-    *    refund ⨝ transaction — lipr/lip multiply rows only.
-    * So the distinct triple set ≡ payment branch ∪ refund branch, and the
-    * index needs no lineitem, customers, or shipping input at all
-    * (triple-set equality with the literal 4-branch union is
-    * spec-asserted, GoldenE2ESpec).
-    */
-  def tripletexInvoicePairDates(t: Tables): DataFrame = {
-    val stp1 = successTransactionPayments(t.transactions)
-      .filter(col("transaction_rank") === 1).as("t")
-    val payment = stp1
-      .join(broadcast(t.orders.as("o")), col("o.id") === col("t.order_id"), "left")
-      .select(col("o.name").as("ORDER NO"), lit("payment").as("payment_tag"),
-        to_date(col("o.created_at")).as("INVOICE DATE"))
-    val refundTriples = t.transactions.as("t")
-      .filter(col("status") === "success" && col("kind") === "refund")
-      .join(t.refunds.as("r"), col("r.transaction_id") === col("t.id"), "inner")
-      .join(broadcast(t.orders.as("o")), col("o.id") === col("t.order_id"), "left")
-      .select(pgConcat(col("o.name"), lit("-1")).as("ORDER NO"),
-        lit("refund").as("payment_tag"),
-        to_date(col("r.created_at")).as("INVOICE DATE"))
-    payment.unionByName(refundTriples)
+      .select(
+        col("transaction_id"), col("order_id"), col("payment_tag"),
+        col("CUSTOMER NO"), col("CUSTOMER NAME"), col("ORDER NO"),
+        round(col("PAID AMOUNT"), 2).as("PAID AMOUNT"),
+        col("ORDER LINE - COUNT"),
+        col("ORDER LINE - PROD NAME"),
+        round(col("ORDER LINE - UNIT PRICE"), 2).as("ORDER LINE - UNIT PRICE"),
+        round(col("ORDER LINE - DISCOUNT"), 2).as("ORDER LINE - DISCOUNT"),
+        col("ORDER LINE - VAT CODE"),
+        col("ORDER LINE - DESCRIPTION"),
+        col("ORDER LINE - PROD NO"),
+        col("PAYMENT TYPE"),
+        col("INVOICE DATE"), col("DELIVERY DATE"), col("ORDER DATE"), col("DUE DATE"))
   }
 
   /** View tripletex_customer_map (`setup.sql:396-404`). */

@@ -154,6 +154,21 @@ object Fixtures {
       """,{"id":1000000002,"quantity":1,"line_item":{"id":7000000101},"subtotal":"0.00",""" +
       """"subtotal_set":{"shop_money":{"currency_code":"NOK"}}}]}]}""")
 
+  /** [[transportFixtures]] with a second refund of #1043, three days after
+    * the first: a refund of its 49.00 shipping with no refund lines. The
+    * view's '#1043-1' pair then carries two INVOICE DATEs, 2021-05-10 and
+    * 2021-05-13.
+    */
+  lazy val lateRefundFixtures: Map[String, String] = transportFixtures
+    .updated(s"${base}orders/4000000002/transactions.json", tx1043.stripSuffix("]}") +
+      """,{"id":3000000103,"order_id":4000000002,"status":"success","amount":"49.00",""" +
+      """"currency":"NOK","error_code":null,"gateway":"stripe","kind":"refund",""" +
+      """"created_at":"2021-05-13T09:00:00Z","processed_at":"2021-05-13T09:00:05Z"}]}""")
+    .updated(s"${base}orders/4000000002/refunds.json", refunds1043.stripSuffix("]}") +
+      """,{"id":2000000002,"note":"shipping refunded","transactions":[{"id":3000000103}],""" +
+      """"created_at":"2021-05-13T09:00:00Z","processed_at":"2021-05-13T09:00:05Z",""" +
+      """"refund_line_items":[]}]}""")
+
   private val emptyRefunds = """{"refunds":[]}"""
   private val emptyTx = """{"transactions":[]}"""
 

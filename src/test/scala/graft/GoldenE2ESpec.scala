@@ -1,6 +1,7 @@
 package graft
 
 import java.time.LocalDate
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ingest.{IngestPipeline, ShopifyClient}
 import graft.io.InvoiceCsv
@@ -33,6 +34,23 @@ class GoldenE2ESpec extends SparkSuite {
     InvoiceNumbers.numberInvoices(view,
       LocalDate.parse("2021-05-01"), LocalDate.parse("2021-05-31"), 100),
     Map("vipps" -> "Vipps", "stripe" -> "Stripe")).cache()
+
+  /** The view as `setup.sql:358-394` writes it: the four branches over the
+    * raw line items, one wide UNION-distinct, the rank filter and the
+    * rounded money columns. The oracle for the view's pushed-down distinct.
+    */
+  private def literalWideDistinctView(t: InvoiceView.Tables): DataFrame = {
+    val stp = InvoiceView.successTransactionPayments(t.transactions)
+    val deduped = InvoiceView.aligned(InvoiceView.productLines(t, stp))
+      .unionByName(InvoiceView.aligned(InvoiceView.refundLines(t)))
+      .unionByName(InvoiceView.aligned(InvoiceView.shippingLines(t, stp)))
+      .unionByName(InvoiceView.aligned(InvoiceView.giftCardLines(t, stp)))
+      .distinct()
+      .filter(col("rank") === 1)
+      .drop("rank", "priority")
+    Seq("PAID AMOUNT", "ORDER LINE - UNIT PRICE", "ORDER LINE - DISCOUNT")
+      .foldLeft(deduped)((d, c) => d.withColumn(c, round(col(c), 2)))
+  }
 
   test("ingest populates all tables with upserted rows") {
     assert(store.read("customers").count() == 2) // both pages of the cursor loop
@@ -174,38 +192,37 @@ class GoldenE2ESpec extends SparkSuite {
     assert(store.read("orders").count() == 3)
   }
 
-  test("single-pass numbering is equivalent to the join-based form") {
-    import org.apache.spark.sql.functions.col
-    val joined = InvoiceNumbers.numberInvoices(view,
-      LocalDate.parse("2021-05-01"), LocalDate.parse("2021-05-31"), 100)
-    val single = InvoiceNumbers.numberInvoicesSinglePass(view,
-      LocalDate.parse("2021-05-01"), LocalDate.parse("2021-05-31"), 100)
-    assert(joined.columns.toSeq == single.columns.toSeq)
-    val key = joined.columns.map(col).toSeq
-    assert(joined.orderBy(key: _*).collect().toSeq ==
-      single.orderBy(key: _*).collect().toSeq)
-    val twoPhase = InvoiceNumbers.numberInvoicesTwoPhase(view,
-      LocalDate.parse("2021-05-01"), LocalDate.parse("2021-05-31"), 100)
-    assert(twoPhase.columns.toSeq == joined.columns.toSeq)
-    assert(joined.orderBy(key: _*).collect().toSeq ==
-      twoPhase.orderBy(key: _*).collect().toSeq)
-    val indexed = InvoiceNumbers.numberInvoicesIndexed(view,
-      InvoiceView.tripletexInvoicePairDates(store.invoiceTables),
-      LocalDate.parse("2021-05-01"), LocalDate.parse("2021-05-31"), 100)
-    assert(indexed.columns.toSeq == joined.columns.toSeq)
-    assert(joined.orderBy(key: _*).collect().toSeq ==
-      indexed.orderBy(key: _*).collect().toSeq)
-    // and on a range that splits a pair's dates: all forms keep the whole pair
-    val narrowJ = InvoiceNumbers.numberInvoices(view,
-      LocalDate.parse("2021-05-04"), LocalDate.parse("2021-05-31"), 1)
-    val narrowS = InvoiceNumbers.numberInvoicesSinglePass(view,
-      LocalDate.parse("2021-05-04"), LocalDate.parse("2021-05-31"), 1)
-    val narrowT = InvoiceNumbers.numberInvoicesTwoPhase(view,
-      LocalDate.parse("2021-05-04"), LocalDate.parse("2021-05-31"), 1)
-    assert(narrowJ.orderBy(key: _*).collect().toSeq ==
-      narrowS.orderBy(key: _*).collect().toSeq)
-    assert(narrowJ.orderBy(key: _*).collect().toSeq ==
-      narrowT.orderBy(key: _*).collect().toSeq)
+  test("numbering keeps a refund pair whose dates straddle the window whole") {
+    // #1043-1 is refunded on 2021-05-10 and again on 2021-05-13. The
+    // reference restricts the window by joining the view onto the numbered
+    // index, so a pair with any date in the window keeps all its rows.
+    val s = new ShopifyStore(spark,
+      java.nio.file.Files.createTempDirectory("late-refund").toString)
+    IngestPipeline.shopifyUpdate(spark, s, new ShopifyClient(
+        new ShopifyClient.FixtureTransport(Fixtures.lateRefundFixtures), Fixtures.base),
+      createdAtMin = Some("2021-05-01"), createdAtMax = Some("2021-05-31"))
+    val lateView = InvoiceView.tripletexInvoice(s.invoiceTables)
+    def rows(from: String, to: String) =
+      InvoiceNumbers.numberInvoices(lateView, LocalDate.parse(from), LocalDate.parse(to), 100)
+        .select("ORDER NO", "INVOICE DATE", "PAID AMOUNT", "INVOICE NO")
+        .as[(String, java.sql.Date, java.math.BigDecimal, Long)].collect()
+        .map { case (o, d, p, n) => (o, d.toString, p.setScale(2).toString, n) }.toSeq.sorted
+    def orders(nos: (String, Long)*) = nos.flatMap {
+      case ("#1042", n) => Seq.fill(2)(("#1042", "2021-05-02", "1648.00", n))
+      case ("#1043", n) => Seq.fill(2)(("#1043", "2021-05-03", "847.00", n))
+      case ("#1044", n) => Seq.fill(2)(("#1044", "2021-05-04", "99.00", n))
+      case ("#1043-1", n) => Seq(("#1043-1", "2021-05-10", "-798.00", n),
+        ("#1043-1", "2021-05-13", "-49.00", n))
+      case other => fail(s"unknown order $other")
+    }.sorted
+    // the window ends between the two refunds: both rows, one number
+    assert(rows("2021-05-01", "2021-05-11") ==
+      orders("#1042" -> 100L, "#1043" -> 101L, "#1043-1" -> 102L, "#1044" -> 103L))
+    // the window starts between them: the same two rows
+    assert(rows("2021-05-11", "2021-05-31") == orders("#1043-1" -> 100L))
+    // the window covers neither refund: the pair gets no number
+    assert(rows("2021-05-01", "2021-05-09") ==
+      orders("#1042" -> 100L, "#1043" -> 101L, "#1044" -> 102L))
   }
 
   test("pushed-distinct view rewrite equals the literal wide union-distinct") {
@@ -221,10 +238,8 @@ class GoldenE2ESpec extends SparkSuite {
     val t = t0.copy(
       lineItemProducts = t0.lineItemProducts.unionByName(dupLip),
       lineItemProductRefunds = t0.lineItemProductRefunds.unionByName(dupLipr))
-    val pushed = InvoiceView.tripletexInvoice(t, sorted = false, persist = false,
-      pushedDistinct = true)
-    val literal = InvoiceView.tripletexInvoice(t, sorted = false, persist = false,
-      pushedDistinct = false)
+    val pushed = InvoiceView.tripletexInvoice(t)
+    val literal = literalWideDistinctView(t)
     assert(pushed.columns.toSeq == literal.columns.toSeq)
     val key = pushed.columns.map(col).toSeq
     assert(pushed.orderBy(key: _*).collect().toSeq ==
@@ -268,25 +283,6 @@ class GoldenE2ESpec extends SparkSuite {
     val key = direct.columns.map(col).toSeq
     assert(direct.orderBy(key: _*).collect().toSeq ==
       legacy.orderBy(key: _*).collect().toSeq)
-  }
-
-  test("slim pair-dates twin carries exactly the view's distinct triple set") {
-    // r7: the 2-branch pair-dates twin must yield the same DISTINCT
-    // (ORDER NO, payment_tag, INVOICE DATE) set as the literal 4-branch
-    // union — the only content numberInvoicesIndexed consumes.
-    import org.apache.spark.sql.functions._
-    val t = store.invoiceTables
-    val stp = InvoiceView.successTransactionPayments(t.transactions)
-    val pl = InvoiceView.productLines(t, stp)
-    val cols = Seq("ORDER NO", "payment_tag", "INVOICE DATE").map(col)
-    val full = pl.select(cols: _*)
-      .unionByName(InvoiceView.refundLines(t).select(cols: _*))
-      .unionByName(InvoiceView.shippingLines(t, stp).select(cols: _*))
-      .unionByName(InvoiceView.giftCardLines(t, stp).select(cols: _*))
-      .distinct()
-    val slim = InvoiceView.tripletexInvoicePairDates(t).distinct()
-    assert(slim.orderBy(cols: _*).collect().toSeq ==
-      full.orderBy(cols: _*).collect().toSeq)
   }
 
   test("customer map view (F1 id derivation)") {

@@ -1,13 +1,14 @@
 package graft.queries
 
-import graft.SparkSuite
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import graft.{ActionPlans, SparkSuite}
 
 /** Plan-shape regression guards: the physical properties the 100 TB
   * posture depends on must survive refactors — filter/column pushdown to
   * the parquet scan, broadcast dimension joins, map-side partial
   * aggregation, and whole-stage codegen participation.
   */
-class PlanSpec extends SparkSuite {
+class PlanSpec extends SparkSuite with ActionPlans {
 
   private def executed(df: org.apache.spark.sql.DataFrame): String = {
     df.collect() // let AQE finalize the adaptive plan
@@ -51,39 +52,38 @@ class PlanSpec extends SparkSuite {
     assert(plan.contains("TakeOrderedAndProject"), plan.take(400))
   }
 
+  /** The nodes of the flagship's numbering action: `invoicePipeline`
+    * returns a frame over checkpointed rows, so its work is planned there.
+    */
+  private def flagshipPlan() = {
+    val runs = executions(InvoicePipeline.invoicePipeline(spark, sf))
+    assert(runs.nonEmpty, "the numbering runs when the pipeline is built")
+    runs.flatMap(qe => nodes(qe.executedPlan))
+  }
+
   test("flagship: broadcasts present, no cartesian products") {
-    val df = InvoicePipeline.invoicePipeline(spark, sf)
-    val plan = executed(df)
-    assert(plan.contains("BroadcastHashJoin"))
-    assert(!plan.contains("CartesianProduct"), "no unintended cross joins")
+    val planned = flagshipPlan()
+    assert(planned.exists(_.isInstanceOf[BroadcastHashJoinExec]))
+    assert(!planned.exists(_.nodeName.contains("CartesianProduct")), "no unintended cross joins")
     spark.catalog.clearCache()
   }
 
   test("flagship: no single-partition exchange ever carries the line-level view") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
     // static plan (AQE off) so ShuffleExchange nodes are directly visible
     // rather than hidden inside materialized query-stage leaves
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val plan = InvoicePipeline.invoicePipeline(spark, sf)
-        .queryExecution.executedPlan
-      val singleExchanges = plan.collectWithSubqueries {
-        case e: ShuffleExchangeLike if e.outputPartitioning == SinglePartition => e
-      }
-      assert(singleExchanges.nonEmpty, "the pair-index numbering exchange exists")
-      // every SinglePartition exchange must sit ABOVE an aggregation (the
-      // pair index), i.e. its input subtree contains a grouped aggregate —
-      // the dense_rank-over-the-whole-view shape has none
-      singleExchanges.foreach { e =>
-        val hasAgg = e.child.collect {
-          case a: BaseAggregateExec if a.groupingExpressions.nonEmpty => a }
-        assert(hasAgg.nonEmpty,
-          s"SinglePartition exchange over non-aggregated data:\n${e.child.treeString.take(2000)}")
-      }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val planned = withoutAqe(flagshipPlan())
+    assert(planned.exists {
+      case e: ShuffleExchangeLike => e.outputPartitioning == SinglePartition
+      case _ => false
+    }, "the pair-index numbering exchange exists")
+    // every SinglePartition exchange must sit ABOVE an aggregation (the
+    // pair index), i.e. its input subtree contains a grouped aggregate —
+    // the dense_rank-over-the-whole-view shape has none
+    val overRows = singleExchangesOverRows(planned)
+    assert(overRows.isEmpty, "SinglePartition exchange over non-aggregated data:\n" +
+      overRows.map(_.child.treeString.take(2000)).mkString("\n"))
     spark.catalog.clearCache()
   }
 
