@@ -123,6 +123,15 @@ object Normalize {
       .select(explode(col(s"p.$field")).as("d"))
   }
 
+  private lazy val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Whether any page body holds a document under `field`. Read on the
+    * driver from the fetched bodies, so a stage with nothing to store
+    * skips its upserts without running a Spark action.
+    */
+  def hasDocs(pages: Seq[String], field: String): Boolean =
+    pages.exists(body => json.readTree(body).path(field).size() > 0)
+
   /** Adapt a payload-ROWS frame — one row per document with the payload
     * fields top-level, e.g. `spark.read.format("shopify")` output — to the
     * `d`-struct shape the `*FromDocs` normalizers select from. Lets the

@@ -39,12 +39,15 @@ final class ShopifyStore(spark: SparkSession, dir: String) {
         TableStore.atomicWrite(spark, Normalize.emptyTable(spark, t.schema), path(t.name))
     }
 
-  /** Raw physical read: includes `__day` when the layout is partitioned. */
+  /** Raw physical read: includes `__day` when the layout is partitioned.
+    * The declared schema goes to the reader, so no footer is opened to
+    * infer one; partition discovery appends `__day`.
+    */
   private def rawRead(table: String): DataFrame = {
     val meta = Schemas.byName(table)
     if (!TableStore.exists(spark, path(table)))
       Normalize.emptyTable(spark, meta.schema)
-    else TableStore.read(spark, path(table))
+    else TableStore.read(spark, path(table), Some(meta.schema))
   }
 
   def read(table: String): DataFrame = {
@@ -82,7 +85,8 @@ final class ShopifyStore(spark: SparkSession, dir: String) {
       if (!TableStore.exists(spark, path(table)))
         TableStore.atomicWrite(spark, deduped, path(table))
       else
-        TableStore.upsert(spark, path(table), deduped, meta.keys, meta.updateColumns)
+        TableStore.upsert(spark, path(table), deduped, meta.keys, meta.updateColumns,
+          Some(meta.schema))
     } else {
       // __day is pinned at first insert (never an update column — made
       // explicit for the updateColumns=None "all non-key" default too):
@@ -93,20 +97,20 @@ final class ShopifyStore(spark: SparkSession, dir: String) {
       // set-once, so the pinned day and created_at agree in practice.
       val allNonKey = meta.schema.fieldNames.toSeq.filterNot(meta.keys.contains)
       val updCols = Some(meta.updateColumns.getOrElse(allNonKey).filterNot(_ == DayCol))
-      // upsert of an empty batch is the identity — and an empty partitionBy
-      // write would leave an unreadable (schema-less) directory behind
-      if (deduped.isEmpty) { init(); return }
       val batch = withDay(deduped)
-      val flatExisting =
-        TableStore.exists(spark, path(table)) &&
-          !TableStore.read(spark, path(table)).columns.contains(DayCol)
+      val flatExisting = TableStore.exists(spark, path(table)) &&
+        TableStore.detectPartitionColumns(spark, path(table)).isEmpty
       if (flatExisting) {
         // one-time layout migration (covers the init() empty bootstrap):
-        // merge against the flat table, rewrite partitioned via tmp+swap
-        val existing = withDay(TableStore.read(spark, path(table)))
+        // merge against the flat table, rewrite partitioned via tmp+swap.
+        // An empty batch is the identity, and an empty partitionBy write
+        // would leave an unreadable (schema-less) directory behind.
+        if (deduped.isEmpty) return
+        val existing = withDay(rawRead(table))
         val merged = TableStore.mergePlan(existing, batch, meta.keys, updCols)
         TableStore.atomicWritePartitioned(spark, merged, path(table), DayCol)
       } else {
+        // its one partition-discovery action also tells an empty batch
         TableStore.upsertPartitioned(spark, path(table), batch, meta.keys,
           DayCol, updCols)
       }

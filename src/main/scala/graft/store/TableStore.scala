@@ -3,6 +3,7 @@ package graft.store
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** What a matched WHEN clause does: update (None = all non-key columns,
   * Some = the partial list) or delete. The SQL MERGE surface parses into
@@ -241,9 +242,15 @@ object TableStore {
     fs(spark, new Path(path)).exists(new Path(path))
   }
 
-  def read(spark: SparkSession, path: String): DataFrame = {
+  /** The table at `path`. With `schema` the read plans against it and
+    * opens no footer to infer one (inference is a Spark job of its own);
+    * partition discovery still appends the layout's partition columns,
+    * taking their types from `schema` when it names them.
+    */
+  def read(spark: SparkSession, path: String,
+           schema: Option[StructType] = None): DataFrame = {
     recover(spark, path)
-    spark.read.parquet(path)
+    schema.fold(spark.read)(spark.read.schema).parquet(path)
   }
 
   /** Exact table row count from parquet FOOTER metadata — ZERO Spark
@@ -547,16 +554,19 @@ object TableStore {
     log
   }
 
-  /** The S5 upsert sink: read-if-exists, merge, atomic rewrite. */
+  /** The S5 upsert sink: read-if-exists, merge, atomic rewrite. A caller
+    * that knows the table's `schema` passes it, and the read infers none.
+    */
   def upsert(spark: SparkSession, path: String, incoming: DataFrame,
-             keys: Seq[String], updateColumns: Option[Seq[String]] = None): Unit = {
+             keys: Seq[String], updateColumns: Option[Seq[String]] = None,
+             schema: Option[StructType] = None): Unit = {
     if (!exists(spark, path)) {
       atomicWrite(spark, incoming, path)
     } else {
       // Merge must be materialized before the target is overwritten (the
       // plan lazily re-reads `path`): stage via the tmp dir handles this —
       // atomicWrite writes tmp fully before touching the target.
-      val merged = mergePlan(read(spark, path), incoming, keys, updateColumns)
+      val merged = mergePlan(read(spark, path, schema), incoming, keys, updateColumns)
       atomicWrite(spark, merged, path)
     }
   }
@@ -826,7 +836,7 @@ object TableStore {
     */
   private def commitPartitionRewrite(spark: SparkSession, path: String, tmp: String,
                                      partitionCols: Seq[String], parts: Seq[Seq[Any]],
-                                     schema: org.apache.spark.sql.types.StructType,
+                                     schema: StructType,
                                      ledgerBatch: Option[Long] = None): Unit = {
     val f = fs(spark, new Path(path))
     val stagedHasDirs = f.exists(new Path(tmp)) &&
@@ -1803,6 +1813,11 @@ object TableStore {
     * than its stored copy would leave the stale copy in the old partition.
     * The reference's natural partition column (`DATE(created_at)`) is
     * immutable, satisfying this.
+    *
+    * One Spark action finds the batch's partitions; an empty batch stops
+    * there and leaves the table as it is. The batch carries the table's
+    * schema: the touched partitions are read with it, so no footer is
+    * opened to infer one.
     */
   def upsertPartitioned(spark: SparkSession, path: String, incoming: DataFrame,
                         keys: Seq[String], partitionCol: String,
@@ -1816,17 +1831,18 @@ object TableStore {
                         keys: Seq[String], partitionCols: Seq[String],
                         updateColumns: Option[Seq[String]]): Unit = {
     require(partitionCols.nonEmpty, "upsertPartitioned needs partition columns")
+    // partsMembership is null-safe: a null partition value in the batch
+    // must still pull the stored null partition into the merge, or the
+    // swap below would replace it with incoming-only rows (data loss)
+    val parts = incoming.select(partitionCols.map(col): _*).distinct()
+      .collect().map(_.toSeq).toSeq
+    // an empty batch is the identity; on a new table it must not write
+    // either: a zero-row dynamic-partition write leaves a schema-less dir
+    if (parts.isEmpty) return
     if (!exists(spark, path)) {
-      // zero-row bootstrap guard: see applyCdcPartitioned
-      if (!incoming.isEmpty)
-        stageClustered(spark, path, incoming, partitionCols, path)
+      stageClustered(spark, path, incoming, partitionCols, path)
     } else {
-      // partsMembership is null-safe: a null partition value in the batch
-      // must still pull the stored null partition into the merge, or the
-      // swap below would replace it with incoming-only rows (data loss)
-      val parts = incoming.select(partitionCols.map(col): _*).distinct()
-        .collect().map(_.toSeq).toSeq
-      val existingAffected = read(spark, path)
+      val existingAffected = read(spark, path, Some(incoming.schema))
         .filter(partsMembership(partitionCols, parts))     // partition pruning
         .select(incoming.columns.map(col).toSeq: _*)       // align field order
       val merged = mergePlan(existingAffected, incoming, keys, updateColumns)

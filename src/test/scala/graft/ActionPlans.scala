@@ -2,11 +2,14 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
@@ -38,6 +41,40 @@ trait ActionPlans { self: SparkSuite =>
     } finally spark.listenerManager.unregister(listener)
     seen.asScala.toSeq.dropWhile(!isMarker("__begin")(_)).drop(1).takeWhile(!isMarker("__end")(_))
   }
+
+  /** The Spark jobs `body` started, in order: each one's SQL execution id
+    * (None for a job outside any SQL execution, such as a parquet schema
+    * inference) and its stage names. Two marker jobs bracket them.
+    */
+  protected def jobs(body: => Unit): Seq[(Option[String], Seq[String])] = {
+    val seen = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e)
+    }
+    def prop(e: SparkListenerJobStart, key: String) =
+      Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+    def isMarker(name: String)(e: SparkListenerJobStart) =
+      prop(e, "spark.job.description").contains(name)
+    def marker(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker("__begin"); body; marker("__end")
+      eventually(timeout(60.seconds)) { assert(seen.asScala.exists(isMarker("__end"))) }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    seen.asScala.toSeq.dropWhile(!isMarker("__begin")(_)).drop(1).takeWhile(!isMarker("__end")(_))
+      .map(e => (prop(e, "spark.sql.execution.id"), e.stageInfos.map(_.name)))
+  }
+
+  /** The directories a query execution writes parquet files to. */
+  protected def writePaths(qe: QueryExecution): Seq[String] =
+    (qe.logical.collect { case c: InsertIntoHadoopFsRelationCommand => c } ++
+      qe.executedPlan.collect { case d: DataWritingCommandExec => d.cmd }
+        .collect { case c: InsertIntoHadoopFsRelationCommand => c })
+      .map(_.outputPath.toString).distinct
 
   /** Every node of an executed plan, through adaptive stages, subqueries
     * and the plans of cached relations.

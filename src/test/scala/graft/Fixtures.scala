@@ -169,6 +169,18 @@ object Fixtures {
       """"created_at":"2021-05-13T09:00:00Z","processed_at":"2021-05-13T09:00:05Z",""" +
       """"refund_line_items":[]}]}""")
 
+  /** [[transportFixtures]] before #1043 was refunded: every order is
+    * `paid`. A later sync with [[transportFixtures]] sees it `refunded`.
+    */
+  lazy val paidFixtures: Map[String, String] = transportFixtures.updated(s"${base}orders.json",
+    orders.replace(""""financial_status":"refunded"""", """"financial_status":"paid""""))
+
+  /** [[paidFixtures]] on a day with no product in the window: the list
+    * holds no document, and no order is refunded.
+    */
+  lazy val paidNoProductFixtures: Map[String, String] =
+    paidFixtures.updated(s"${base}products.json", """{"products":[]}""")
+
   private val emptyRefunds = """{"refunds":[]}"""
   private val emptyTx = """{"transactions":[]}"""
 

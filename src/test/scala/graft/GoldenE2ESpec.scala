@@ -192,6 +192,25 @@ class GoldenE2ESpec extends SparkSuite {
     assert(store.read("orders").count() == 3)
   }
 
+  test("an order stored as paid and re-synced as refunded gets its refunds") {
+    val s = new ShopifyStore(spark,
+      java.nio.file.Files.createTempDirectory("refunded-later").toString)
+    def sync(fixtures: Map[String, String]): Unit = IngestPipeline.shopifyUpdate(spark, s,
+      new ShopifyClient(new ShopifyClient.FixtureTransport(fixtures), Fixtures.base),
+      createdAtMin = Some("2021-05-01"), createdAtMax = Some("2021-05-31"))
+    sync(Fixtures.paidFixtures)
+    assert(s.read("refunds").count() == 0)
+    sync(Fixtures.transportFixtures)
+    // financial_status is insert-only, so the store still says paid; the
+    // refunds fan-out follows the status the sync fetched
+    assert(s.read("orders").filter($"id" === 4000000002L)
+      .select("financial_status").as[String].collect().toSeq == Seq("paid"))
+    assert(s.read("refunds").select("id", "order_id").as[(Long, Long)].collect().toSeq ==
+      Seq((2000000001L, 4000000002L)))
+    assert(s.read("line_item_product_refunds").select("id", "refund_id")
+      .as[(Long, Long)].collect().toSeq == Seq((1000000001L, 2000000001L)))
+  }
+
   test("numbering keeps a refund pair whose dates straddle the window whole") {
     // #1043-1 is refunded on 2021-05-10 and again on 2021-05-13. The
     // reference restricts the window by joining the view onto the numbered

@@ -1,10 +1,11 @@
 package graft.store
 
 import java.nio.file.{Files, Paths}
-import graft.SparkSuite
+import scala.jdk.CollectionConverters._
+import graft.{ActionPlans, SparkSuite}
 import org.apache.spark.sql.functions._
 
-class PartitionedStoreSpec extends SparkSuite {
+class PartitionedStoreSpec extends SparkSuite with ActionPlans {
   import spark.implicits._
 
   private def base = Seq(
@@ -82,5 +83,29 @@ class PartitionedStoreSpec extends SparkSuite {
     val (pcols, tuples) = TableStore.partitionTuples(spark, d)
     assert(pcols == Seq("__day") && tuples.flatten.sorted ==
       Seq("2021-01-01", "2021-01-02", "2021-01-03"))
+  }
+
+  test("an empty batch on an existing table changes no file and no row") {
+    val dir = Files.createTempDirectory("pempty").toString + "/t"
+    TableStore.upsertPartitioned(spark, dir, base, Seq("id"), "day")
+    def files = {
+      val root = Paths.get(dir)
+      val it = Files.walk(root)
+      try it.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString -> Files.getLastModifiedTime(p).toMillis)
+        .toSeq.sorted
+      finally it.close()
+    }
+    def rows = TableStore.read(spark, dir).orderBy("id").collect().toSeq
+    val (filesBefore, rowsBefore) = (files, rows)
+    Thread.sleep(1100) // mtime resolution guard
+    val ran = executions {
+      TableStore.upsertPartitioned(spark, dir, base.limit(0), Seq("id"), "day")
+    }
+    // one action finds no partition; nothing is staged or swapped
+    assert(ran.size == 1, ran.map(_.analyzed.nodeName))
+    assert(ran.flatMap(writePaths).isEmpty)
+    assert(files == filesBefore)
+    assert(rows == rowsBefore)
   }
 }
