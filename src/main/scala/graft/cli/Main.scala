@@ -34,8 +34,12 @@ object Main {
         case "--gateway" +: v +: tail =>
           // the reference pairs with ':' (`shopifydb.py` arghandler);
           // '=' accepted too
-          val Array(f, t) = v.split("[:=]", 2)
-          gateways :+= (f -> t); rest = tail
+          v.split("[:=]", 2) match {
+            case Array(f, t) => gateways :+= (f -> t)
+            case _ => throw new IllegalArgumentException(
+              s"--gateway expects from:to (or from=to), got: $v")
+          }
+          rest = tail
         case k +: v +: tail if k.startsWith("--") =>
           flags += (k.stripPrefix("--") -> v); rest = tail
         case other +: _ =>

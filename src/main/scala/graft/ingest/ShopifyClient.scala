@@ -27,9 +27,9 @@ object ShopifyClient {
   }
 
   /** Production transport over java.net.http (JDK built-in, no extra
-    * dependency). Untestable in the zero-egress build environment —
-    * exercised only via its compile contract; the seam is identical to
-    * FixtureTransport's.
+    * dependency): URL-encoded query parameters, HTTP Basic auth with the
+    * API key and password. `ShopifyClientSpec` runs it against a loopback
+    * HTTP server (parameters, auth header, Link paging, retries).
     */
   final class UrlTransport(apiKey: String, apiPass: String,
                            timeoutMs: Long = 30000) extends Transport {

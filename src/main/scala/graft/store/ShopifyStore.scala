@@ -82,11 +82,8 @@ final class ShopifyStore(spark: SparkSession, dir: String) {
     val conformed = Normalize.conform(incoming, meta.schema)
     val deduped = TableStore.dedupeByKey(conformed, meta.keys, meta.keys.head)
     if (!meta.dayPartitioned) {
-      if (!TableStore.exists(spark, path(table)))
-        TableStore.atomicWrite(spark, deduped, path(table))
-      else
-        TableStore.upsert(spark, path(table), deduped, meta.keys, meta.updateColumns,
-          Some(meta.schema))
+      TableStore.upsert(spark, path(table), deduped, meta.keys, meta.updateColumns,
+        Some(meta.schema))
     } else {
       // __day is pinned at first insert (never an update column — made
       // explicit for the updateColumns=None "all non-key" default too):

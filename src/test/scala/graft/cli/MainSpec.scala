@@ -61,6 +61,14 @@ class MainSpec extends SparkSuite {
     }
   }
 
+  test("a --gateway value without ':' or '=' fails with the expected form") {
+    // parsing runs before Main.session, so no session is built or stopped
+    val e = intercept[IllegalArgumentException] {
+      Main.main(Array("tripletex-verify", "--gateway", "shopify"))
+    }
+    assert(e.getMessage.contains("from:to") && e.getMessage.contains("shopify"))
+  }
+
   /** Runs `probe`'s main with `args` in a child JVM (one SparkContext per
     * JVM, and codegen's class cache is sized once per JVM) on the test JVM's
     * options and classpath; returns its stdout lines and a failure report.

@@ -1,11 +1,15 @@
 package graft.ingest
 
+import java.net.{InetAddress, InetSocketAddress}
+import java.nio.charset.StandardCharsets.UTF_8
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.funsuite.AnyFunSuite
 import ShopifyClient._
 
 /** Unit coverage for the S1/S2 client semantics: Link-header cursor
   * parsing, the 10×/4s/×1.5 retry policy, page-loop termination, and the
-  * page_info parameter switch. No Spark needed.
+  * page_info parameter switch. No Spark needed. [[UrlTransport]] runs
+  * against the JDK's HTTP server on the loopback interface.
   */
 class ShopifyClientSpec extends AnyFunSuite {
 
@@ -147,5 +151,80 @@ class ShopifyClientSpec extends AnyFunSuite {
       nanoTime = () => fail("clock must not be read when rate is unset"))
     (1 to 5).foreach(i => c.fetchOrderResource(i.toLong, "transactions", Seq("id")))
     assert(!slept)
+  }
+
+  /** A loopback HTTP server answering every request with `handle`; gives
+    * `body` its base URL (ending in '/') and stops when `body` returns.
+    */
+  private def withServer[T](handle: HttpExchange => (Int, Map[String, String], String))(
+      body: String => T): T = {
+    val server = HttpServer.create(new InetSocketAddress(InetAddress.getLoopbackAddress, 0), 0)
+    server.createContext("/", (ex: HttpExchange) => {
+      val (status, headers, text) = handle(ex)
+      headers.foreach { case (k, v) => ex.getResponseHeaders.add(k, v) }
+      val bytes = text.getBytes(UTF_8)
+      ex.sendResponseHeaders(status, if (bytes.isEmpty) -1 else bytes.length.toLong)
+      if (bytes.nonEmpty) ex.getResponseBody.write(bytes)
+      ex.close()
+    })
+    server.start()
+    try body(s"http://127.0.0.1:${server.getAddress.getPort}/admin/")
+    finally server.stop(0)
+  }
+
+  test("UrlTransport sends URL-encoded parameters and Basic auth") {
+    val seen = new java.util.concurrent.LinkedBlockingQueue[(String, String, String)]()
+    withServer { ex =>
+      seen.put((ex.getRequestURI.getRawPath, ex.getRequestURI.getRawQuery,
+        ex.getRequestHeaders.getFirst("Authorization")))
+      (200, Map.empty, """{"orders":[]}""")
+    } { base =>
+      val resp = new UrlTransport("key", "p@ss:word").get(s"${base}orders.json",
+        Map("fields" -> "id,name", "created_at_min" -> "2021-05-01T00:00:00+02:00"))
+      assert(resp.status == 200 && resp.body == """{"orders":[]}""")
+    }
+    assert(seen.size == 1)
+    val (path, query, auth) = seen.take()
+    assert(path == "/admin/orders.json")
+    assert(query.split("&").toSet ==
+      Set("fields=id%2Cname", "created_at_min=2021-05-01T00%3A00%3A00%2B02%3A00"))
+    val expected = java.util.Base64.getEncoder.encodeToString("key:p@ss:word".getBytes(UTF_8))
+    assert(auth == s"Basic $expected")
+  }
+
+  test("UrlTransport: fetchAll follows the Link rel=next cursor across two pages") {
+    val queries = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    withServer { ex =>
+      val q = ex.getRequestURI.getRawQuery
+      queries.add(q)
+      if (q.contains("page_info=p2")) (200, Map.empty, """{"orders":[2]}""")
+      else {
+        val next = s"http://127.0.0.1:${ex.getLocalAddress.getPort}/admin/orders.json?limit=250&page_info=p2"
+        (200, Map("Link" -> s"""<$next>; rel="next""""), """{"orders":[1]}""")
+      }
+    } { base =>
+      val c = new ShopifyClient(new UrlTransport("k", "p"), base, sleeper = _ => fail("no retry expected"))
+      assert(c.fetchAll("orders.json", Seq("id")) == Seq("""{"orders":[1]}""", """{"orders":[2]}"""))
+    }
+    assert(queries.size == 2)
+    assert(queries.get(0).contains("fields=id") && !queries.get(0).contains("page_info"))
+    assert(queries.get(1).split("&").toSet == Set("limit=250", "page_info=p2"))
+  }
+
+  test("UrlTransport: a 429 and a 500 are retried to a 200") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val waits = scala.collection.mutable.ArrayBuffer.empty[Long]
+    withServer { _ =>
+      calls.incrementAndGet() match {
+        case 1 => (429, Map.empty, "")
+        case 2 => (500, Map.empty, "oops")
+        case _ => (200, Map.empty, """{"refunds":[]}""")
+      }
+    } { base =>
+      val c = new ShopifyClient(new UrlTransport("k", "p"), base, sleeper = waits.append(_))
+      assert(c.fetchOrderResource(7L, "refunds", Seq("id")) == """{"refunds":[]}""")
+    }
+    assert(calls.get == 3)
+    assert(waits.toSeq == Seq(4000L, 6000L))
   }
 }
