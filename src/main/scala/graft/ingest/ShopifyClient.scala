@@ -89,6 +89,15 @@ object ShopifyClient {
     }
   }
 
+  /** The wait a `Retry-After` header asks for, in ms: a non-negative
+    * number of seconds (Shopify sends e.g. `2.0`); None when absent or in
+    * another form, such as an HTTP date.
+    */
+  def retryAfterMs(headers: Map[String, String]): Option[Long] =
+    headers.collectFirst { case (k, v) if k.equalsIgnoreCase("Retry-After") => v.trim }
+      .flatMap(_.toDoubleOption).filter(s => s >= 0 && !s.isInfinite)
+      .map(s => math.ceil(s * 1000).toLong)
+
   /** `pagination_links` (`shopify.py:96-109`): extract rel links from the
     * `Link` header, then the `page_info` cursor of the `next` link.
     */
@@ -212,6 +221,12 @@ final class ShopifyClient(
     getWithRetry(s"$baseUrl" + s"orders/$orderId/$resource.json",
       Map("fields" -> fields.mkString(","))).body
 
+  /** GET with the reference's retry policy. A 429 waits what its
+    * `Retry-After` header asks (seconds; the name in any case), as
+    * Shopify's REST limit expects; any other failure, or a 429 without a
+    * usable header, waits the backoff, which grows ×`retryIncrease` per
+    * attempt either way.
+    */
   private def getWithRetry(url: String, params: Map[String, String]): HttpResponse = {
     var waitMs = retryWaitMs
     var attempt = 0
@@ -224,7 +239,7 @@ final class ShopifyClient(
         throw new RuntimeException(
           s"$attempt unsuccessful requests from $url. " +
             s"Error code ${resp.status}, reason: ${resp.reason}")
-      sleeper(waitMs)
+      sleeper(if (resp.status == 429) retryAfterMs(resp.headers).getOrElse(waitMs) else waitMs)
       waitMs = (waitMs * retryIncrease).toLong
     }
     throw new IllegalStateException("unreachable")

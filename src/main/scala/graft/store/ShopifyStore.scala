@@ -1,7 +1,10 @@
 package graft.store
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.model.Schemas
 import graft.ingest.Normalize
 
@@ -55,14 +58,30 @@ final class ShopifyStore(spark: SparkSession, dir: String) {
     if (raw.columns.contains(DayCol)) raw.drop(DayCol) else raw
   }
 
-  /** S4 date-bounded read (`db.py:81-113`): on a partitioned layout the
-    * bounds hit the `__day` partition column, so untouched day partitions'
-    * files are never opened; on a flat layout this degrades to the pushed
-    * `to_date(created_at)` filter.
+  /** S4 date-bounded read (`db.py:81-113`). On a partitioned layout only
+    * the `__day=` directories inside the bounds are listed and read: the
+    * reader gets them as explicit paths under `basePath`, so `__day` stays
+    * a partition column, and the bounds still filter it as a partition
+    * filter. The listing is the window's, not the table's: a store past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` day
+    * directories starts no listing job. A directory is skipped only when
+    * its day is outside a bound that parses the way the filter's
+    * `cast("date")` parses it. On a flat layout this degrades to the
+    * pushed `to_date(created_at)` filter.
     */
   def readBounded(table: String, createdAtMin: Option[String],
                   createdAtMax: Option[String]): DataFrame = {
-    val raw = rawRead(table)
+    val schema = Schemas.byName(table).schema
+    val (lo, hi) = (createdAtMin.flatMap(asDay), createdAtMax.flatMap(asDay))
+    val raw = dayDirs(table) match {
+      case None => rawRead(table)
+      case Some(dirs) =>
+        val inWindow = dirs.collect {
+          case (dir, day) if day.forall(d => lo.forall(d >= _) && hi.forall(d <= _)) => dir
+        }
+        if (inWindow.isEmpty) Normalize.emptyTable(spark, schema)
+        else spark.read.schema(schema).option("basePath", path(table)).parquet(inWindow: _*)
+    }
     val day: Column =
       if (raw.columns.contains(DayCol)) col(DayCol) else to_date(col("created_at"))
     val bounded = (createdAtMin, createdAtMax) match {
@@ -73,6 +92,25 @@ final class ShopifyStore(spark: SparkSession, dir: String) {
     }
     if (bounded.columns.contains(DayCol)) bounded.drop(DayCol) else bounded
   }
+
+  /** A string as `cast("date")` reads it, in days since the epoch. */
+  private def asDay(s: String): Option[Int] =
+    DateTimeUtils.stringToDate(UTF8String.fromString(s))
+
+  /** The `__day=` directories of a day-partitioned table with their days
+    * (None for a value that is not a date); None for any other layout.
+    * One driver listing of the table directory, after crash recovery.
+    */
+  private def dayDirs(table: String): Option[Seq[(String, Option[Int])]] =
+    if (!Schemas.byName(table).dayPartitioned || !TableStore.exists(spark, path(table))) None
+    else {
+      val root = new Path(path(table))
+      val prefix = DayCol + "="
+      val dirs = TableStore.listLeafDirs(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root, 1)
+        .filter(_.startsWith(prefix))
+        .map(name => s"${path(table)}/$name" -> asDay(name.drop(prefix.length)))
+      if (dirs.isEmpty) None else Some(dirs)
+    }
 
   /** S5: batch upsert honoring the table's key + partial update columns
     * (and the partitioned layout for day-partitioned tables).

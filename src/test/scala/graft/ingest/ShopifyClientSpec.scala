@@ -227,4 +227,29 @@ class ShopifyClientSpec extends AnyFunSuite {
     assert(calls.get == 3)
     assert(waits.toSeq == Seq(4000L, 6000L))
   }
+
+  test("UrlTransport: a 429 with Retry-After waits the header's seconds") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val waits = scala.collection.mutable.ArrayBuffer.empty[Long]
+    withServer { _ =>
+      // the JDK server sends the field name as "Retry-after"
+      if (calls.incrementAndGet() == 1) (429, Map("Retry-After" -> "2"), "")
+      else (200, Map.empty, """{"refunds":[]}""")
+    } { base =>
+      val c = new ShopifyClient(new UrlTransport("k", "p"), base, sleeper = waits.append(_))
+      assert(c.fetchOrderResource(7L, "refunds", Seq("id")) == """{"refunds":[]}""")
+    }
+    assert(calls.get == 2)
+    assert(waits.toSeq == Seq(2000L))
+  }
+
+  test("retryAfterMs reads seconds in any header case and rejects other forms") {
+    import ShopifyClient.retryAfterMs
+    assert(retryAfterMs(Map("retry-after" -> "2.0")).contains(2000L))
+    assert(retryAfterMs(Map("RETRY-AFTER" -> " 0.25 ")).contains(250L))
+    assert(retryAfterMs(Map.empty).isEmpty)
+    assert(retryAfterMs(Map("Retry-After" -> "Wed, 21 Oct 2026 07:28:00 GMT")).isEmpty)
+    assert(retryAfterMs(Map("Retry-After" -> "-1")).isEmpty)
+    assert(retryAfterMs(Map("Retry-After" -> "NaN")).isEmpty)
+  }
 }
